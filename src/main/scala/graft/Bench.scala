@@ -3,6 +3,23 @@ package graft
 import scala.util.control.NonFatal
 
 object Bench {
+  /** Per-gate stream telemetry from samples keyed by leg (0 = cold):
+    * (gate, batch count of the last steady sample — the replay is
+    * deterministic — and the median state-commit ms over the steady
+    * samples), by gate name. Keyed, not positional: a gate whose cold
+    * run failed recorded no cold sample, so none of its steady samples
+    * is dropped; a gate with no steady sample is left out, as its
+    * query row reads -1. */
+  def streamProf(samples: Map[String, Seq[(Int, Long, Long)]]): Seq[(String, Long, Long)] =
+    samples.toSeq.sortBy(_._1).flatMap { case (n, ss) =>
+      val steady = ss.filter(_._1 > 0)
+      if (steady.isEmpty) None
+      else {
+        val cms = steady.map(_._3).sorted
+        Some((n, steady.last._2, cms(cms.length / 2)))
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.build("graft-bench")
@@ -96,16 +113,18 @@ object Bench {
     // machinery; neither = the aggregate itself) from the artifact.
     val streamMeter = new StreamProgressMeter(spark)
     val streamSamples = scala.collection.mutable.Map[String,
-      scala.collection.mutable.ArrayBuffer[(Long, Long)]]()
-    /** (wall s, task-cpu s, gc s); all -1 on failure. */
+      scala.collection.mutable.ArrayBuffer[(Int, Long, Long)]]()
+    /** (wall s, task-cpu s, gc s) of `name` in `leg` (0 = cold); all -1
+      * on failure. */
     def timedRun(name: String,
-        fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double, Double) =
+        fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
+        leg: Int): (Double, Double, Double) =
       try {
         val (b0, m0) = streamMeter.snapshot()
         val r = meter.timed(fn(spark, sfDir).count(): Unit)
         val (b1, m1) = streamMeter.snapshot()
         if (b1 > b0) streamSamples.getOrElseUpdate(name,
-          scala.collection.mutable.ArrayBuffer()) += ((b1 - b0, m1 - m0))
+          scala.collection.mutable.ArrayBuffer()) += ((leg, b1 - b0, m1 - m0))
         r
       } catch {
         case NonFatal(e) =>
@@ -118,15 +137,15 @@ object Bench {
 
     // leg 0: cold
     val cold: Seq[(String, (Double, Double, Double))] =
-      qs.map { case (n, fn) => n -> timedRun(n, fn) }
+      qs.map { case (n, fn) => n -> timedRun(n, fn, 0) }
     val coldMap = cold.toMap
     probe("after_cold")
     // legs 1..nLegs: steady samples, mid-leg probe between the halves
     val legs: Seq[Map[String, (Double, Double, Double)]] = (1 to nLegs).map { li =>
       val (front, back) = qs.splitAt(qs.length / 2)
-      val f = front.map { case (n, fn) => n -> timedRun(n, fn) }
+      val f = front.map { case (n, fn) => n -> timedRun(n, fn, li) }
       probe(s"mid_leg$li")
-      val b = back.map { case (n, fn) => n -> timedRun(n, fn) }
+      val b = back.map { case (n, fn) => n -> timedRun(n, fn, li) }
       probe(s"after_leg$li")
       (f ++ b).toMap
     }
@@ -201,16 +220,7 @@ object Bench {
     // width in the artifact, "width-capped" vs "genuinely serial" is
     // adjudicable from BENCH_rN.json alone.
     val width = spark.conf.get("spark.sql.shuffle.partitions")
-    // per-gate stream telemetry: batch count from the last run (the
-    // replay is deterministic), state-commit ms as the median of the
-    // steady-leg samples (cold dropped when steady samples exist)
-    val streamProf: Seq[(String, Long, Long)] = results.collect {
-      case (n, _) if streamSamples.contains(n) =>
-        val ss = streamSamples(n)
-        val steady = if (ss.length > 1) ss.drop(1) else ss.toSeq
-        val cms = steady.map(_._2).sorted
-        (n, ss.last._1, cms(cms.length / 2))
-    }
+    val streamProf = Bench.streamProf(streamSamples.view.mapValues(_.toSeq).toMap)
     val streamProfJson = streamProf.map { case (n, b, cm) =>
       s"${jsonEscape(n)}:[$b,$cm]"
     }.mkString("{", ",", "}")

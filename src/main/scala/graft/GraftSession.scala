@@ -336,11 +336,14 @@ object GraftSession {
     }
     perParent.getOrElseUpdate(parts, {
       val c = s.newSession()
-      // runtime-set parent confs (newSession re-reads only SparkConf)
-      s.conf.getOption("graft.stream.statePartitions")
-        .foreach(c.conf.set("graft.stream.statePartitions", _))
-      s.conf.getOption("graft.dataFactor")
-        .foreach(c.conf.set("graft.dataFactor", _))
+      // runtime-set parent confs (newSession re-reads only SparkConf);
+      // the broadcast threshold carries the data tier (64 MB at
+      // dataFactor > 1), fixed before any query runs, so a copy at
+      // creation suffices — at dataFactor 1 it is the SparkConf's 10 MB
+      // the child would read anyway
+      Seq("graft.stream.statePartitions", "graft.dataFactor",
+          "spark.sql.autoBroadcastJoinThreshold")
+        .foreach(k => s.conf.getOption(k).foreach(c.conf.set(k, _)))
       c.conf.set("spark.sql.shuffle.partitions", parts.toString)
       c.conf.set("spark.sql.adaptive.enabled", "false")
       c

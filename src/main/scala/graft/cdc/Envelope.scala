@@ -41,15 +41,24 @@ object Envelope {
         StructField("txId", LongType),
         StructField("lsn", LongType)))))))))
 
-  /** The 21-column flat bronze schema (`cdc_to_parquet.py:131-158`).
+  /** The flat bronze schema (`cdc_to_parquet.py:131-158`): both row
+    * images, the envelope fields, then the `dt` partition key — exactly
+    * what [[toBronze]] writes. Readers of a bronze directory pass it to
+    * `spark.read.schema`, so no footer-inference job runs per read.
     * `price` stays STRING here deliberately (SURVEY §7.4.8). */
-  val bronzeColumns: Seq[String] = Seq(
-    "after_id", "after_product_name", "after_category", "after_price",
-    "after_quantity", "after_sale_date", "after_created_at",
-    "before_id", "before_product_name", "before_category", "before_price",
-    "before_quantity", "before_sale_date", "before_created_at",
-    "op", "ts_ms", "event_timestamp", "source_db", "source_table",
-    "txId", "lsn")
+  val bronzeSchema: StructType = {
+    def image(side: String) = rowImageSchema.fields.toSeq
+      .map(f => StructField(s"${side}_${f.name}", f.dataType))
+    StructType(image("after") ++ image("before") ++ Seq(
+      StructField("op", StringType),
+      StructField("ts_ms", LongType),
+      StructField("event_timestamp", TimestampType),
+      StructField("source_db", StringType),
+      StructField("source_table", StringType),
+      StructField("txId", LongType),
+      StructField("lsn", LongType),
+      StructField("dt", StringType)))
+  }
 
   private def image(side: String): Seq[Column] =
     rowImageSchema.fieldNames.toSeq.map(f => col(s"j.payload.$side.$f").as(s"${side}_$f"))

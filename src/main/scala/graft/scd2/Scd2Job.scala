@@ -3,13 +3,18 @@ package graft.scd2
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.cdc.Envelope
 import java.sql.Timestamp
 
 /** Checkpoint bookkeeping (`scd2_spark_processor.py:167-201, 491-516`):
-  * an append-only table consumed as `MAX(last_processed_timestamp)`.
+  * an append-only table whose `MAX(last_processed_timestamp)` is the
+  * read boundary. Each [[advance]] commits the running (max ts, max
+  * lsn) as its manifest meta, so [[lastProcessed]] reads the head
+  * manifest alone — no scan over a table that grows a file per run.
   * The strict-`>` read boundary lives in [[Scd2Processor.incremental]].
   */
 final class Checkpoints(spark: SparkSession, root: String, clock: () => Timestamp) {
+  import Checkpoints._
   private val table = new VersionedTable(spark, root,
     Partitioning.Unpartitioned, () => clock().getTime)
 
@@ -19,14 +24,11 @@ final class Checkpoints(spark: SparkSession, root: String, clock: () => Timestam
     StructField("processed_at", TimestampType),
     StructField("records_processed", LongType)))
 
-  def lastProcessed: Option[Timestamp] =
-    if (!table.exists) None
-    else Option(table.read().agg(max("last_processed_timestamp")).first().getTimestamp(0))
+  /** `MAX(last_processed_timestamp)` over every advance. */
+  def lastProcessed: Option[Timestamp] = head.map(_._1)
 
-  def lastLsn: Option[Long] =
-    if (!table.exists) None
-    else Option(table.read().agg(max("last_processed_lsn")).first())
-      .filterNot(_.isNullAt(0)).map(_.getLong(0))
+  private def head: Option[(Timestamp, Option[Long])] =
+    table.latestMeta.flatMap(parseMeta)
 
   /** Advance: append (max ts, max lsn, clock, count). The caller passes
     * bounds it already aggregated — ONE aggregation pass per run, not
@@ -34,12 +36,30 @@ final class Checkpoints(spark: SparkSession, root: String, clock: () => Timestam
     * :534-538, SURVEY §4). */
   def advance(maxTs: Timestamp, maxLsn: Option[Long], n: Long): Unit = {
     val row = Row(maxTs, maxLsn.orNull, clock(), n)
+    val (ts, lsn) = head.fold((maxTs, maxLsn)) { case (pTs, pLsn) =>
+      (if (pTs.after(maxTs)) pTs else maxTs, (pLsn ++ maxLsn).maxOption)
+    }
     table.append(spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(row), 1), schema))
+      spark.sparkContext.parallelize(Seq(row), 1), schema), meta = Some(metaOf(ts, lsn)))
+  }
+}
+
+object Checkpoints {
+  private val MetaRe = "checkpoint (\\S+) (-?\\d+|-)".r
+  private def metaOf(ts: Timestamp, lsn: Option[Long]): String =
+    s"checkpoint ${ts.toInstant} ${lsn.fold("-")(_.toString)}"
+  private def parseMeta(meta: String): Option[(Timestamp, Option[Long])] = meta match {
+    case MetaRe(ts, lsn) =>
+      Some((Timestamp.from(java.time.Instant.parse(ts)), lsn.toLongOption))
+    case _ => None
   }
 }
 
 object Scd2Job {
+  /** [[Scd2Job.bounds]] of one increment. */
+  final case class Bounds(maxTs: Option[Timestamp], maxLsn: Option[Long], n: Long,
+                          touched: Seq[String])
+
   /** Idempotence tag committed with each applied increment. */
   def incrementTag(maxTsMillis: Long, maxLsn: Long): String =
     s"scd2-inc-$maxTsMillis-$maxLsn"
@@ -102,7 +122,27 @@ final class Scd2Job(spark: SparkSession, stagingPath: String, tableRoot: String,
   def currentState: DataFrame =
     table.read().drop("effective_start_date")
 
+  /** (max event ts, max lsn, row count, touched buckets) of a bronze
+    * increment, in ONE aggregate. The buckets come from the same
+    * [[VersionedTable.partitionOf]] the writes route by, applied to the
+    * id each row can merge under ([[Scd2Processor.bronzeKey]]) — a
+    * superset of the ids [[Scd2Processor.processBatch]] emits, so no
+    * separate bucket-discovery pass over the transformed batch. */
+  def bounds(batch: DataFrame): Scd2Job.Bounds = {
+    val r = batch.agg(
+      max("event_timestamp"), max("lsn"), count(lit(1)),
+      collect_set(table.partitionOf(Scd2Processor.bronzeKey))).first()
+    Scd2Job.Bounds(Option(r.getTimestamp(0)),
+      if (r.isNullAt(1)) None else Some(r.getLong(1)),
+      r.getLong(2), r.getSeq[String](3).sorted)
+  }
+
   /** One incremental run; returns number of bronze rows processed.
+    *
+    * Job budget: an increment on an existing table runs at most 12
+    * Spark jobs (bounds aggregate, transform + merge + write, zone maps,
+    * checkpoint append), because at increment sizes each job's fixed
+    * scheduling cost, not its data, is the run's wall time.
     *
     * Crash-safe: the applied increment's (max event ts, max lsn) is
     * committed INSIDE the table manifest. On a rerun after a crash
@@ -116,33 +156,28 @@ final class Scd2Job(spark: SparkSession, stagingPath: String, tableRoot: String,
     * checkpoint with no fence). */
   def run(): Long = {
     if (!stagingNonEmpty) return 0L
-    val bronze = spark.read.parquet(stagingPath)
+    val bronze = spark.read.schema(Envelope.bronzeSchema).parquet(stagingPath)
     val batch = Scd2Processor.incremental(bronze, checkpoints.lastProcessed)
-      .persist() // single materialization feeds transform + checkpoint (SURVEY §4)
+      .persist() // single materialization feeds bounds + merge (SURVEY §4)
     try {
-      val bounds = batch.agg(
-        max("event_timestamp").as("ts"), max("lsn").as("lsn"),
-        count(lit(1)).as("n")).first()
-      val n = bounds.getLong(2)
-      if (n == 0) return 0L
-      val maxTs = Option(bounds.getTimestamp(0))
-      val maxLsn = if (bounds.isNullAt(1)) None else Some(bounds.getLong(1))
+      val b = bounds(batch)
+      if (b.n == 0) return 0L
       val appliedTs = if (table.exists) table.latestMeta.flatMap(Scd2Job.parseTag).map(_._1)
                       else None
       val alreadyApplied =
-        maxTs.isDefined && appliedTs.exists(_ >= maxTs.get.getTime)
+        b.maxTs.isDefined && appliedTs.exists(_ >= b.maxTs.get.getTime)
       if (!alreadyApplied) {
         val fresh = appliedTs match {
           case Some(ts) => batch.filter(col("event_timestamp") > lit(new Timestamp(ts)))
           case None => batch
         }
         val tag = Scd2Job.incrementTag(
-          maxTs.map(_.getTime).getOrElse(0L), maxLsn.getOrElse(0L))
-        Scd2Processor.applyBatch(table, Scd2Processor.processBatch(fresh),
+          b.maxTs.map(_.getTime).getOrElse(0L), b.maxLsn.getOrElse(0L))
+        Scd2Processor.applyBatch(table, Scd2Processor.processBatch(fresh), b.touched,
           meta = Some(tag), exactDedup = exactDedup, mor = mor)
       }
-      maxTs.foreach(ts => checkpoints.advance(ts, maxLsn, n))
-      n
+      b.maxTs.foreach(ts => checkpoints.advance(ts, b.maxLsn, b.n))
+      b.n
     } finally batch.unpersist()
   }
 }

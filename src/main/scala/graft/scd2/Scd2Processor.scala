@@ -1,6 +1,6 @@
 package graft.scd2
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.TimestampType
@@ -124,21 +124,7 @@ object Scd2Processor {
     * versions appended — exactly like the reference's sequential MERGEs.
     */
   def merge(target: DataFrame, scd2Batch: DataFrame): DataFrame = {
-    val deletes = scd2Batch.filter(col("operation_type") === "DELETE")
-    val newRecords = scd2Batch.filter(col("operation_type") === "INSERT_UPDATE")
-
-    // Pre-aggregated merge sources (deviation §7.4.3): last delete wins;
-    // close-old uses the single is_current=true row per id (:459-465's
-    // SELECT DISTINCT is already unique per id by construction).
-    val deleteSrc = deletes.groupBy(col("id").as("d_id"))
-      .agg(max("effective_start_ts").as("delete_ts"))
-    val closeSrc = newRecords.filter(col("is_current"))
-      .select(col("id").as("c_id"), col("effective_start_ts").as("close_ts"))
-      .distinct()
-
-    val updated = target
-      .join(deleteSrc, col("id") === col("d_id"), "left")
-      .join(closeSrc, col("id") === col("c_id"), "left")
+    val updated = withMergeSource(target, scd2Batch)
       .select(
         col("id"), col("product_name"), col("category"), col("price"),
         col("quantity"), col("sale_date"), col("created_at"),
@@ -152,7 +138,23 @@ object Scd2Processor {
         when(col("is_current") && col("delete_ts").isNotNull, lit(true))
           .otherwise(col("is_deleted")).as("is_deleted"))
 
-    updated.unionByName(newRecords.drop("operation_type"))
+    updated.unionByName(scd2Batch.filter(col("operation_type") === "INSERT_UPDATE")
+      .drop("operation_type"))
+  }
+
+  /** `target` left-joined to the batch's per-id merge source: ONE
+    * aggregate carries both MERGE sources (deviation §7.4.3, the
+    * sources are pre-aggregated per id) — `delete_ts`, the last delete
+    * of the id, and `close_ts`, the start of its new current version
+    * (:459-465's SELECT DISTINCT is already unique per id by
+    * construction) — so the merge is one join, not one per source. */
+  private def withMergeSource(target: DataFrame, scd2Batch: DataFrame): DataFrame = {
+    val src = scd2Batch.groupBy(col("id").as("m_id")).agg(
+      max(when(col("operation_type") === "DELETE", col("effective_start_ts")))
+        .as("delete_ts"),
+      max(when(col("operation_type") === "INSERT_UPDATE" && col("is_current"),
+        col("effective_start_ts"))).as("close_ts"))
+    target.join(src, col("id") === col("m_id"), "left")
   }
 
   /** Merge-on-read twin of [[merge]]: instead of returning the full new
@@ -168,16 +170,7 @@ object Scd2Processor {
     * HISTORY row sharing (id, start). Closes only ever target
     * is_current=true rows, so keying the flag exempts history rows. */
   def mergeChanged(target: DataFrame, scd2Batch: DataFrame): (DataFrame, DataFrame) = {
-    val deletes = scd2Batch.filter(col("operation_type") === "DELETE")
-    val newRecords = scd2Batch.filter(col("operation_type") === "INSERT_UPDATE")
-    val deleteSrc = deletes.groupBy(col("id").as("d_id"))
-      .agg(max("effective_start_ts").as("delete_ts"))
-    val closeSrc = newRecords.filter(col("is_current"))
-      .select(col("id").as("c_id"), col("effective_start_ts").as("close_ts"))
-      .distinct()
-    val affected = target
-      .join(deleteSrc, col("id") === col("d_id"), "left")
-      .join(closeSrc, col("id") === col("c_id"), "left")
+    val affected = withMergeSource(target, scd2Batch)
       .filter(col("is_current") &&
         (col("delete_ts").isNotNull || col("close_ts").isNotNull))
     val changed = affected.select(
@@ -209,6 +202,16 @@ object Scd2Processor {
     * Pruning is exact because `merge` only alters rows whose id appears
     * in the batch, and an id's rows all live in its bucket.
     *
+    * `touched` is the caller's bucket set: any superset of the buckets
+    * of the batch's ids is correct (an untouched bucket rewrites to the
+    * same rows). Taking it from the caller lets the batch job fold
+    * bucket discovery into the aggregate it already runs
+    * ([[Scd2Job.bounds]]), so a merge on an existing table is the
+    * transform, one merge-source aggregate, one join and the write —
+    * no persist and no discovery job, because at micro-batch sizes the
+    * per-job fixed cost is the merge's wall time. Callers holding only
+    * the bronze batch use [[touchedBuckets]].
+    *
     * Bootstrap subtlety: when the table does not exist yet and the
     * batch carries no INSERT_UPDATE rows (delete-only first increment),
     * NOTHING is committed — deletes for unseen keys are no-ops anyway
@@ -217,7 +220,7 @@ object Scd2Processor {
     * `meta` rides inside the commit manifest for writer idempotence
     * (streaming batchId). Returns the committed version, or None if
     * nothing was committed. */
-  def applyBatch(table: VersionedTable, scd2Batch: DataFrame,
+  def applyBatch(table: VersionedTable, scd2Batch: DataFrame, touched: Seq[String],
                  meta: Option[String] = None,
                  exactDedup: Boolean = false,
                  /** Merge-on-read: commit only the changed rows plus
@@ -229,32 +232,38 @@ object Scd2Processor {
     def shaped(df: DataFrame): DataFrame =
       df.withColumn("effective_start_date", to_date(col("effective_start_ts")))
     val clusterBy = Seq("id", "effective_start_ts") // tight zone maps for key lookups
-    // the transformed batch always feeds TWO jobs (emptiness probe +
-    // bootstrap write, or bucket discovery + merge write) — persist so
-    // the window/union lineage runs once per micro-batch
-    val cached = scd2Batch.persist()
-    try {
-      if (!table.exists) {
-        val init = cached.filter(col("operation_type") === "INSERT_UPDATE")
-          .drop("operation_type")
-        if (init.isEmpty) None
-        else Some(table.overwrite(shaped(init), clusterBy, meta))
-      } else {
-        val touched = table.partitionValues(cached)
-        val target = table.readPartitions(touched).drop("effective_start_date")
-        val batch = if (exactDedup) dropCrossBatchNoOps(target, cached) else cached
-        if (mor) {
-          val (changed, delKeys) = mergeChanged(target, batch)
-          val newRows = changed.unionByName(
-            batch.filter(col("operation_type") === "INSERT_UPDATE")
-              .drop("operation_type"))
-          Some(table.mergeDeltas(shaped(newRows), delKeys, touched, clusterBy, meta))
-        } else
-          Some(table.replacePartitions(shaped(merge(target, batch)), touched,
-            clusterBy, meta))
-      }
-    } finally { cached.unpersist(); () }
+    if (!table.exists) {
+      val init = scd2Batch.filter(col("operation_type") === "INSERT_UPDATE")
+        .drop("operation_type")
+      if (init.isEmpty) None
+      else Some(table.overwrite(shaped(init), clusterBy, meta))
+    } else {
+      table.checkPartitionCount(touched.size)
+      val target = table.readPartitions(touched).drop("effective_start_date")
+      val batch = if (exactDedup) dropCrossBatchNoOps(target, scd2Batch) else scd2Batch
+      if (mor) {
+        val (changed, delKeys) = mergeChanged(target, batch)
+        val newRows = changed.unionByName(
+          batch.filter(col("operation_type") === "INSERT_UPDATE")
+            .drop("operation_type"))
+        Some(table.mergeDeltas(shaped(newRows), delKeys, touched, clusterBy, meta))
+      } else
+        Some(table.replacePartitions(shaped(merge(target, batch)), touched,
+          clusterBy, meta))
+    }
   }
+
+  /** The id a bronze row can merge under: the before image's for a
+    * delete, the after image's otherwise — every id
+    * [[processBatch]] can emit for the row. */
+  val bronzeKey: Column = when(col("op") === "d", col("before_id")).otherwise(col("after_id"))
+
+  /** The buckets of `table` a bronze batch can touch — the `touched`
+    * argument of [[applyBatch]] for callers with no aggregate of their
+    * own to fold it into. One distinct-collect job over the bronze
+    * rows. */
+  def touchedBuckets(table: VersionedTable, bronze: DataFrame): Seq[String] =
+    table.partitionValues(bronze.select(bronzeKey.as("id")))
 
   /** `exactDedup` extension (SURVEY §7.4.4): the reference never
     * consults the STORED hash, so a re-sent identical update in a later

@@ -256,8 +256,9 @@ object Scd2Queries {
         .unionByName(mergeOpsEnvelope(keys.filter(k % 4 === 0), "d", -k - 1, p1, t1, 1000000000L))
       // production shape: id-bucketed table, single-file delta commits
       val t = new VersionedTable(s, dir.getPath, Partitioning.BucketBy("id", 4))
-      Scd2Processor.applyBatch(t, Scd2Processor.processBatch(batch1.coalesce(1)))
-      Scd2Processor.applyBatch(t, Scd2Processor.processBatch(batch2.coalesce(1)))
+      Scd2Processor.applyBatch(t, Scd2Processor.processBatch(batch1.coalesce(1)), Nil)
+      Scd2Processor.applyBatch(t, Scd2Processor.processBatch(batch2.coalesce(1)),
+        Scd2Processor.touchedBuckets(t, batch2))
       dir.getPath
     })
     new VersionedTable(s, root, Partitioning.BucketBy("id", 4))

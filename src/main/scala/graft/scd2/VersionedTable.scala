@@ -19,17 +19,22 @@ import java.nio.charset.StandardCharsets.UTF_8
   * (reference: `scd2_spark_processor.py` hidden partitioning).
   *
   * Values must be filesystem-safe strings (alphanumerics, `-`, `_`,
-  * `.`, `:`); bucket ordinals and ISO dates qualify.
+  * `.`, `:`); bucket ordinals and ISO dates qualify. The transforms
+  * themselves are [[VersionedTable.partitionOf]].
   */
-sealed trait Partitioning { def expr: Option[Column] }
+sealed trait Partitioning {
+  /** The source column the partition value derives from (None when
+    * unpartitioned). */
+  def source: Option[String]
+}
 object Partitioning {
-  case object Unpartitioned extends Partitioning { val expr: Option[Column] = None }
+  case object Unpartitioned extends Partitioning { val source: Option[String] = None }
   final case class ByColumn(column: String) extends Partitioning {
-    def expr: Option[Column] = Some(col(column).cast("string"))
+    def source: Option[String] = Some(column)
   }
   final case class BucketBy(column: String, buckets: Int) extends Partitioning {
     require(buckets > 0, "buckets must be positive")
-    def expr: Option[Column] = Some(pmod(hash(col(column)), lit(buckets)).cast("string"))
+    def source: Option[String] = Some(column)
   }
 }
 
@@ -194,12 +199,8 @@ final class VersionedTable(spark: SparkSession, root: String,
     * column. O(touched buckets) I/O, O(1-ish files) on a compacted
     * bucketed-and-clustered table. */
   def readForKeys(keys: DataFrame): DataFrame = {
-    val keyCol = partitioning match {
-      case Partitioning.BucketBy(c, _) => c
-      case Partitioning.ByColumn(c) => c
-      case Partitioning.Unpartitioned =>
-        throw new IllegalArgumentException("readForKeys needs a partitioned table")
-    }
+    val keyCol = partitioning.source.getOrElse(
+      throw new IllegalArgumentException("readForKeys needs a partitioned table"))
     val m = readManifest(requireHead())
     val keep = partitionValues(keys).toSet
     val inBuckets = m.entries.filter(e => keep(e.part))
@@ -233,26 +234,51 @@ final class VersionedTable(spark: SparkSession, root: String,
       case _ => true // no stats for this column → must read
     }
 
+  /** The partition value this table's [[Partitioning]] assigns to a
+    * row whose source column holds `key` — the one definition of every
+    * transform, shared by the write routing, [[partitionValues]] and
+    * callers that fold bucket discovery into an aggregate of their own
+    * (`Scd2Job.bounds`). Non-null: NULL keys map to [[NullPart]] (the
+    * bucket hash of NULL is the hash seed, already non-null), so a
+    * `collect_set` over it loses no partition. */
+  def partitionOf(key: Column): Column = partitioning match {
+    case Partitioning.Unpartitioned => lit("")
+    case Partitioning.ByColumn(_) => coalesce(key.cast("string"), lit(NullPart))
+    case Partitioning.BucketBy(_, n) => pmod(hash(key), lit(n)).cast("string")
+  }
+
+  private def partitionExpr: Option[Column] =
+    partitioning.source.map(c => partitionOf(col(c)))
+
   /** Distinct partition values this table's [[Partitioning]] assigns to
     * `df`'s rows — small by construction (≤ bucket count for BucketBy,
     * ≤ days-in-feed for ByDay). The values are collected to the driver
     * because the manifest commit is a driver-side operation; that is
     * sound only while the partition-value cardinality is metadata-sized,
-    * so the collect is CAPPED (`graft.partitionValues.max`, default
-    * 100k ≈ 270 years of daily partitions) and fails fast with the
-    * offending count instead of silently OOMing the driver on a
-    * pathological partitioning expression. */
-  def partitionValues(df: DataFrame): Seq[String] = partitioning.expr match {
+    * so the collect is CAPPED ([[checkPartitionCount]]) and fails fast
+    * instead of silently OOMing the driver on a pathological
+    * partitioning expression. */
+  def partitionValues(df: DataFrame): Seq[String] = partitionExpr match {
     case None => Seq("")
     case Some(e) =>
-      val cap = spark.conf.getOption("graft.partitionValues.max")
-        .map(_.toInt).getOrElse(100000)
-      val vals = df.select(e.as("__p")).distinct().limit(cap + 1).collect()
-      require(vals.length <= cap,
-        s"partitioning yields more than $cap distinct values — a " +
-          "driver-side manifest cannot hold this; coarsen the partition " +
-          "expression or raise graft.partitionValues.max")
-      vals.map(r => Option(r.getString(0)).getOrElse(NullPart)).toSeq
+      val vals = df.select(e.as("__p")).distinct().limit(partitionCap + 1).collect()
+      checkPartitionCount(vals.length)
+      vals.map(_.getString(0)).toSeq
+  }
+
+  private def partitionCap: Int = spark.conf.getOption("graft.partitionValues.max")
+    .map(_.toInt).getOrElse(100000)
+
+  /** The partition-value cap (`graft.partitionValues.max`, default
+    * 100k ≈ 270 years of daily partitions): a commit touching more
+    * partitions than a driver-side manifest can hold fails with the
+    * offending count. Checked wherever a touched set is collected. */
+  def checkPartitionCount(n: Int): Unit = {
+    val cap = partitionCap
+    require(n <= cap,
+      s"partitioning yields more than $cap distinct values — a " +
+        "driver-side manifest cannot hold this; coarsen the partition " +
+        "expression or raise graft.partitionValues.max")
   }
 
   /** `(partitionValue, relativeDataFile)` pairs of a committed version —
@@ -465,10 +491,12 @@ final class VersionedTable(spark: SparkSession, root: String,
     * `mergeSchema = true` opts into evolution: new columns are added to
     * the manifest schema and old files null-fill them on read (Delta's
     * per-write `mergeSchema` analog). Off by default so a typo'd or
-    * renamed column fails loudly instead of silently null-filling. */
-  def append(df: DataFrame, mergeSchema: Boolean = false): Int =
+    * renamed column fails loudly instead of silently null-filling.
+    * `meta` rides inside the commit manifest, as for [[overwrite]]. */
+  def append(df: DataFrame, mergeSchema: Boolean = false,
+             meta: Option[String] = None): Int =
     currentHead match {
-      case None => overwrite(df)
+      case None => overwrite(df, meta = meta)
       case Some(cur) =>
         val prev = readManifest(cur)
         val target = unionSchema(prev.schema, df, mergeSchema)
@@ -478,7 +506,7 @@ final class VersionedTable(spark: SparkSession, root: String,
         }: _*)
         val v = nextVersion()
         val entries = writeData(shaped, v, Nil)
-        commit(v, None, target, prev.entries ++ entries, parent = Some(cur))
+        commit(v, meta, target, prev.entries ++ entries, parent = Some(cur))
         advanceMain(v)
         v
     }
@@ -520,9 +548,10 @@ final class VersionedTable(spark: SparkSession, root: String,
     * compact to one file per partition (via the repartition-by-value
     * write path); unpartitioned ones coalesce to `targetFileCount`. */
   def compact(targetFileCount: Int, clusterBy: Seq[String] = Nil): Int =
-    partitioning.expr match {
-      case None => overwrite(read().coalesce(math.max(1, targetFileCount)), clusterBy)
-      case Some(_) => overwrite(read(), clusterBy)
+    partitioning match {
+      case Partitioning.Unpartitioned =>
+        overwrite(read().coalesce(math.max(1, targetFileCount)), clusterBy)
+      case _ => overwrite(read(), clusterBy)
     }
 
   /** Partition-scoped compaction: fold ONLY `parts`' accumulated
@@ -887,14 +916,25 @@ final class VersionedTable(spark: SparkSession, root: String,
   private def writeEntries(df: DataFrame, dir: Path, clusterBy: Seq[String],
                            kind: String, seq: Int,
                            zoneCols: Seq[String] = Nil): Seq[Entry] = {
-    val raw = partitioning.expr match {
+    val raw = partitionExpr match {
       case None =>
         val out = if (clusterBy.nonEmpty) df.sortWithinPartitions(clusterBy.map(col): _*) else df
         out.write.mode(SaveMode.Overwrite).parquet(dir.toString)
         listFilesRec(dir).map(f => Entry("", relativize(f), kind, seq))
       case Some(e) =>
-        val keyed = df.withColumn(Gp, e).repartition(col(Gp))
-        val sorted = if (clusterBy.nonEmpty) keyed.sortWithinPartitions(clusterBy.map(col): _*) else keyed
+        // An explicit count (the session's cores), because AQE
+        // coalesces a column-only repartition, which at merge sizes
+        // folds every touched partition into ONE task that sorts and
+        // writes them serially; a count the caller sets is never
+        // coalesced. Hash routing puts each partition value in exactly
+        // one task, so each partition gets one file per commit. The sort
+        // leads with the partition value because the writer sorts by it
+        // otherwise, and that sort replaces (drops) a clusterBy-only one.
+        val keyed = df.withColumn(Gp, e)
+          .repartition(spark.sparkContext.defaultParallelism, col(Gp))
+        val sorted =
+          if (clusterBy.nonEmpty) keyed.sortWithinPartitions((col(Gp) +: clusterBy.map(col)): _*)
+          else keyed
         sorted.write.mode(SaveMode.Overwrite).partitionBy(Gp).parquet(dir.toString)
         if (!fs.exists(dir)) Nil
         else fs.listStatus(dir)
@@ -906,21 +946,23 @@ final class VersionedTable(spark: SparkSession, root: String,
     }
     val zcs = if (zoneCols.nonEmpty) zoneCols else clusterBy
     if (kind != "d" || zcs.isEmpty || raw.isEmpty) raw
-    else attachZoneMaps(raw, zcs)
+    else attachZoneMaps(raw, StructType(zcs.map(df.schema(_))))
   }
 
-  /** Per-file zone maps for `zcs` (every zone column of the commit):
-    * ONE column-pruned scan over the just-written files — the
-    * Delta/Iceberg stats-collection analog, O(new data) at commit
+  /** Per-file zone maps for the `zones` columns (every zone column of
+    * the commit): ONE column-pruned scan over the just-written files —
+    * the Delta/Iceberg stats-collection analog, O(new data) at commit
     * time, one min/max aggregate pair per column in the SAME pass.
-    * Aggregation runs on the TYPED column (string min of "9"/"10"
-    * would invert); only the result is stringified for the manifest.
-    * All-null columns keep no stats and are never pruned on. */
-  private def attachZoneMaps(entries: Seq[Entry], zcs: Seq[String]): Seq[Entry] = {
+    * The scan takes the columns' written types, so no footer-inference
+    * job runs first. Aggregation runs on the TYPED column (string min
+    * of "9"/"10" would invert); only the result is stringified for the
+    * manifest. All-null columns keep no stats and are never pruned on. */
+  private def attachZoneMaps(entries: Seq[Entry], zones: StructType): Seq[Entry] = {
+    val zcs = zones.fieldNames.toSeq
     val aggs = zcs.flatMap(zc => Seq(
       min(col(zc)).cast("string").as(s"lo_$zc"),
       max(col(zc)).cast("string").as(s"hi_$zc")))
-    val stats = spark.read
+    val stats = spark.read.schema(zones)
       .parquet(entries.map(e => new Path(qRoot, e.relPath).toString): _*)
       .select(col("_metadata.file_name").as(FileCol) +: zcs.map(col): _*)
       .groupBy(FileCol)

@@ -278,7 +278,9 @@ object Streams {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val tag = s"scd2-batch-$batchId"
         if (!batch.isEmpty && !table.latestMeta.contains(tag)) {
-          Scd2Processor.applyBatch(table, Scd2Processor.processBatch(batch),
+          val touched =
+            if (table.exists) Scd2Processor.touchedBuckets(table, batch) else Nil
+          Scd2Processor.applyBatch(table, Scd2Processor.processBatch(batch), touched,
             meta = Some(tag), exactDedup = exactDedup, mor = mor)
           retainVersions.foreach(table.vacuum)
           ()

@@ -56,6 +56,20 @@ class EnvelopeSpec extends SparkSpec {
     assert(rows.head.getAs[String]("dt") == "2024-06-10")
   }
 
+  test("bronzeSchema is the schema toBronze writes, and reads a bronze dir back") {
+    def shape(t: org.apache.spark.sql.types.StructType) = t.fields.toSeq.map(f => (f.name, f.dataType))
+    val bronze = Envelope.toBronze(parse(Seq(
+      toJson(CdcOp("c", None, Some(img), 1718000000000L, 1, 1)),
+      toJson(CdcOp("d", Some(img), None, 1718000001000L, 2, 2)))))
+    assert(shape(bronze.schema) == shape(Envelope.bronzeSchema))
+    val dir = java.nio.file.Files.createTempDirectory("bronze").toString + "/b"
+    bronze.write.partitionBy("dt").parquet(dir)
+    // the declared schema keeps `dt` the string toBronze wrote, where
+    // footer inference would have guessed a date from the directory name
+    val typed = spark.read.schema(Envelope.bronzeSchema).parquet(dir)
+    assert(typed.orderBy("lsn").collect().toSeq == bronze.orderBy("lsn").collect().toSeq)
+  }
+
   test("fixture stream is deterministic for a seed") {
     val a = randomStream(seed = 11, nKeys = 5, nOps = 50).map(toJson)
     val b = randomStream(seed = 11, nKeys = 5, nOps = 50).map(toJson)

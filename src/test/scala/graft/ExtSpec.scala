@@ -413,6 +413,17 @@ class ExtSpec extends SparkSpec {
       s"empty window must read zero after the drain, got ($cpuIdle, $gcIdle)")
   }
 
+  test("Bench.streamProf: samples keyed by leg, a failed cold run drops no steady sample") {
+    val prof = Bench.streamProf(Map(
+      // cold run failed (no leg-0 sample): all three steady legs count
+      "stream_a" -> Seq((1, 4L, 30L), (2, 4L, 10L), (3, 4L, 20L)),
+      // cold sample excluded from the steady median
+      "stream_b" -> Seq((0, 6L, 900L), (1, 6L, 40L), (2, 6L, 50L), (3, 6L, 60L)),
+      // only ever ran cold: its query row reads -1, so no telemetry row
+      "stream_c" -> Seq((0, 2L, 5L))))
+    assert(prof == Seq(("stream_a", 4L, 20L), ("stream_b", 6L, 50L)))
+  }
+
   test("minhashNearDupPairs operator: custom columns, exact dup found, distinct doc clean") {
     import spark.implicits._
     // deterministic fixture: identical texts share every shingle

@@ -603,6 +603,24 @@ class PlanSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == "10m")
   }
 
+  test("noAqe children copy the parent's broadcast threshold: 64 MB past dataFactor 1") {
+    val dir = java.nio.file.Files.createTempDirectory("noaqe").toString
+    def threshold(s: org.apache.spark.sql.SparkSession): Long =
+      s.sessionState.conf.autoBroadcastJoinThreshold
+    // dataFactor 1: the child keeps the 10 MB every small-SF plan was built with
+    val small = spark.newSession()
+    small.conf.set("graft.dataFactor", "1")
+    assert(threshold(GraftSession.noAqe(small, dir)) == (10L << 20))
+    // dataFactor > 1: the parent's runtime-set 64 MB reaches the child
+    val big = spark.newSession()
+    big.conf.set("graft.dataFactor", "2")
+    big.conf.set("spark.sql.autoBroadcastJoinThreshold", "64m")
+    val child = GraftSession.noAqe(big, dir)
+    assert(threshold(child) == (64L << 20))
+    assert(child.conf.get("graft.dataFactor") == "2")
+    assert(child.conf.get("spark.sql.adaptive.enabled") == "false")
+  }
+
   test("domain cap: salted local top-K guards the per-source window") {
     // two row_number passes — the (source, doc_id%16) local cap that
     // bounds any mega-domain's sort at 1/16th, then the per-source

@@ -218,7 +218,7 @@ class Scd2Spec extends SparkSpec {
     val batch1 = graft.scd2.Scd2Processor.incremental(
       spark.read.parquet(staging), None)
     graft.scd2.Scd2Processor.applyBatch(job.table,
-      graft.scd2.Scd2Processor.processBatch(batch1),
+      graft.scd2.Scd2Processor.processBatch(batch1), touched = Nil,
       meta = Some(graft.scd2.Scd2Job.incrementTag(t0 * 1000, 1)))
     // MORE data lands before the rerun, so the re-read increment is a
     // superset of what was applied — the fence must drop the replayed
@@ -352,6 +352,110 @@ class Scd2Spec extends SparkSpec {
       assert(v1(part) == v0(part), s"bucket $part must carry forward untouched")
     }
     assert(job.currentState.count() == 2001) // 2000 keys + 1 closed version
+  }
+
+  /** A bucketed job over a loaded 200-key snapshot, plus the bronze
+    * writer for its staging dir. */
+  private def loadedJob(): (Scd2Job, Seq[CdcOp] => Unit) = {
+    val staging = tmp() + "/staging"
+    val job = new Scd2Job(spark, staging, tmp() + "/table", tmp() + "/ck", fixedClock)
+    val land = (ops: Seq[CdcOp]) =>
+      bronzeOf(ops).write.mode("append").partitionBy("dt").parquet(staging)
+    land((1 to 200).map(k => op("c", k, "100", t0 + k, k.toLong)))
+    job.run()
+    (job, land)
+  }
+
+  /** A 20-key increment mixing updates, deletes and creates. */
+  private val increment: Seq[CdcOp] =
+    (1 to 10).map(k => op("u", k * 7, "250", t0 + 1000 + k, 1000L + k)) ++
+      (1 to 5).map(k => op("d", k * 11, "100", t0 + 1020 + k, 1020L + k)) ++
+      (1 to 5).map(k => op("c", 300 + k, "50", t0 + 1030 + k, 1030L + k))
+
+  test("job budget: one incremental run on a bucketed table starts at most 12 Spark jobs") {
+    val (job, land) = loadedJob()
+    land(increment)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.GraftSchedulerBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      assert(job.run() == increment.size)
+      org.apache.spark.GraftSchedulerBridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get() <= 12, s"incremental run started ${jobs.get()} Spark jobs")
+    // 200 snapshot keys: 10 updated stay current, 5 deleted close, 5 created
+    assert(job.currentState.filter(col("is_current")).count() == 200)
+  }
+
+  test("bounds-aggregate buckets cover the buckets of the transformed batch") {
+    import spark.implicits._
+    val job = new Scd2Job(spark, tmp() + "/staging", tmp() + "/table", tmp() + "/ck",
+      fixedClock)
+    // c/u/d rows, a delete of a key no batch ever created, and a row
+    // whose id is null (it still lands in the bucket NULL hashes to)
+    val bronze = bronzeOf(increment :+ op("d", 9999, "1", t0 + 2000, 2000))
+      .unionByName(bronzeOf(Seq(op("c", 1, "1", t0 + 2001, 2001)))
+        .withColumn("after_id", lit(null).cast("int")))
+    val folded = job.bounds(bronze).touched
+    val transformed = job.table.partitionValues(Scd2Processor.processBatch(bronze))
+    assert(transformed.nonEmpty)
+    assert(transformed.toSet.subsetOf(folded.toSet),
+      s"missing buckets: ${transformed.toSet -- folded}")
+    assert(folded.toSet == Scd2Processor.touchedBuckets(job.table, bronze).toSet)
+    assert(folded.contains(job.table.partitionValues(
+      Seq(Option.empty[Int]).toDF("id")).head))
+  }
+
+  test("the partition-value cap still raises when buckets come from the bounds aggregate") {
+    val (job, land) = loadedJob()
+    land(increment)
+    spark.conf.set("graft.partitionValues.max", "2")
+    try {
+      val e = intercept[IllegalArgumentException](job.run())
+      assert(e.getMessage.contains("graft.partitionValues.max"))
+    } finally spark.conf.unset("graft.partitionValues.max")
+    assert(job.table.latestVersion.contains(0), "a refused merge commits nothing")
+    assert(job.run() == increment.size)
+  }
+
+  test("checkpoint head meta equals a scan of max(last_processed_timestamp)") {
+    val staging = tmp() + "/staging"
+    val ck = tmp() + "/ck"
+    def scanned: Option[Timestamp] = Option(
+      new graft.scd2.VersionedTable(spark, ck).read()
+        .agg(max("last_processed_timestamp")).first().getTimestamp(0))
+    val job = new Scd2Job(spark, staging, tmp() + "/table", ck, fixedClock)
+    val land = (ops: Seq[CdcOp]) =>
+      bronzeOf(ops).write.mode("append").partitionBy("dt").parquet(staging)
+    assert(job.checkpoints.lastProcessed.isEmpty)
+    Seq(Seq(op("c", 1, "100", t0, 1), op("c", 2, "100", t0 + 5, 2)),
+      Seq(op("u", 1, "200", t0 + 60, 3)),
+      Seq(op("d", 2, "100", t0 + 120, 4))).foreach { ops =>
+      land(ops)
+      job.run()
+      assert(job.checkpoints.lastProcessed == scanned)
+    }
+    assert(job.checkpoints.lastProcessed.contains(sec(t0 + 120)))
+    // crash between merge commit and checkpoint advance: the merge is
+    // applied with the tag run() writes, then a rerun sees new data too
+    land(Seq(op("u", 1, "300", t0 + 180, 5)))
+    val pending = Scd2Processor.incremental(spark.read.parquet(staging),
+      job.checkpoints.lastProcessed)
+    Scd2Processor.applyBatch(job.table, Scd2Processor.processBatch(pending),
+      Scd2Processor.touchedBuckets(job.table, pending),
+      meta = Some(Scd2Job.incrementTag((t0 + 180) * 1000, 5)))
+    land(Seq(op("u", 2, "400", t0 + 240, 6)))
+    assert(job.run() == 2L)
+    assert(job.checkpoints.lastProcessed == scanned)
+    assert(job.checkpoints.lastProcessed.contains(sec(t0 + 240)))
+    assert(job.run() == 0L)
+    assert(job.checkpoints.lastProcessed == scanned)
   }
 
   test("timestamp time travel resolves trunk ancestry, not branch commits (D7)") {

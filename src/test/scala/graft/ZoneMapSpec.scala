@@ -132,6 +132,20 @@ class ZoneMapSpec extends SparkSpec {
     assert(one.toSeq == Seq((1, "v1!")))
   }
 
+  test("partitioned writes: one file per bucket, clusterBy order inside every file") {
+    val root = tmp()
+    val t = new VersionedTable(spark, root, Partitioning.BucketBy("id", 4))
+    val ids = new scala.util.Random(7).shuffle((1 to 400).toList)
+    t.overwrite(ids.map(i => (i, i % 7, s"v$i")).toDF("id", "k", "v").repartition(3),
+      clusterBy = Seq("k", "id"))
+    val files = t.manifestFiles(0)
+    assert(files.map(_._1).distinct.size == files.size, s"one file per bucket: $files")
+    files.foreach { case (part, f) =>
+      val got = spark.read.parquet(s"$root/$f").select("k", "id").as[(Int, Int)].collect().toSeq
+      assert(got == got.sorted, s"bucket $part lost its clusterBy order")
+    }
+  }
+
   // 64×64 uniform grid: every (a, b) pair once — the worst case for
   // linear clustering (trailing column fully shuffled within files)
   // and the textbook Z-order payoff surface
