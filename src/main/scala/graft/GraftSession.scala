@@ -133,6 +133,13 @@ object GraftSession {
       .config("spark.sql.warehouse.dir",
         s"${sys.props("java.io.tmpdir")}/graft-warehouse-p${ProcessHandle.current().pid()}")
       .config("spark.ui.enabled", "false")
+      // local disk through the fork-free file: filesystem (graft.io):
+      // the stock one starts a shell process per create, mkdirs, rename
+      // probe and permission read. FileSystem for tables and parquet
+      // writers, AbstractFileSystem for streaming checkpoints and state
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.io.NioLocalFs].getName)
       .getOrCreate()
     // `cores` may be a non-numeric master spec like "*"; shuffle
     // partitions must still be a number — fall back to the actual

@@ -44,20 +44,9 @@ object Lineage {
   def cut(df: DataFrame): DataFrame = {
     val factor = df.sparkSession.conf.getOption("graft.dataFactor")
       .flatMap(_.toIntOption).getOrElse(1)
-    // dev experiment knob (r14, VERDICT item 4 — checkpoint storage
-    // level for the iterative graph family's GC term): overrides the
-    // data-sized level below; default unchanged. Conf first so a
-    // same-JVM interleaved A/B can flip it per shape.
-    df.sparkSession.conf.getOption("graft.cutLevel").filter(_.nonEmpty)
-      .orElse(sys.env.get("SPARK_GRAFT_CUT_LEVEL")) match {
-      case Some(lvl) =>
-        df.localCheckpoint(eager = true,
-          storageLevel = StorageLevel.fromString(lvl))
-      case None =>
-        if (factor > 1)
-          df.localCheckpoint(eager = true, storageLevel = StorageLevel.DISK_ONLY)
-        else df.localCheckpoint()
-    }
+    if (factor > 1)
+      df.localCheckpoint(eager = true, storageLevel = StorageLevel.DISK_ONLY)
+    else df.localCheckpoint()
   }
 
   /** Materialize-once for a subtree consumed by SEVERAL branches of ONE

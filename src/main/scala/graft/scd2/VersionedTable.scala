@@ -987,15 +987,19 @@ final class VersionedTable(spark: SparkSession, root: String,
     }
   }
 
+  /** Data files under `dir`, depth-first in listing order. A plain
+    * `listStatus` walk: `listFiles` would build a `LocatedFileStatus`
+    * per file, loading permissions and block locations only to drop
+    * them. */
   private def listFilesRec(dir: Path): Seq[Path] = {
     if (!fs.exists(dir)) return Nil
     val out = Seq.newBuilder[Path]
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val st = it.next()
+    def walk(d: Path): Unit = fs.listStatus(d).foreach { st =>
       val n = st.getPath.getName
-      if (!n.startsWith("_") && !n.startsWith(".")) out += st.getPath
+      if (st.isDirectory) walk(st.getPath)
+      else if (!n.startsWith("_") && !n.startsWith(".")) out += st.getPath
     }
+    walk(dir)
     out.result()
   }
 
@@ -1008,7 +1012,15 @@ final class VersionedTable(spark: SparkSession, root: String,
 
   /** Atomic commit: manifest → `.tmp-*`, then rename into place. A
     * crash before the rename leaves no visible version; meta is inside
-    * the manifest so idempotence tags are atomic with visibility. */
+    * the manifest so idempotence tags are atomic with visibility.
+    *
+    * A racing writer of the same version loses because the rename does
+    * not clobber: it returns false when the destination exists. On
+    * `file:` that no-clobber rename is graft's own filesystem
+    * ([[graft.io.NioLocalFileSystem]]), registered by `GraftSession`.
+    * It is check-then-rename, not atomic: two writers that both pass the
+    * check inside the same instant can still both rename, the later one
+    * replacing the earlier manifest. */
   private def commit(v: Int, meta: Option[String], schema: StructType,
                      entries: Seq[Entry], parent: Option[Int] = None): Unit = {
     val sb = new StringBuilder
