@@ -92,17 +92,15 @@ object Bench {
     // have twice been poisoned by host drift (r11 +15%, r12 the
     // unresolved 3.54 headline on a ~2×-slowed box) — per-query CPU
     // seconds are the host-state-insensitive reading. The listener sums
-    // executorCpuTime (ns actually ON-CPU per task, ThreadMXBean; the
-    // r12 lm_score/keywords reconciliations already used this per-query
-    // — this makes it board-wide) over every completed stage; snapshots
+    // executorCpuTime (ns actually ON-CPU per task, ThreadMXBean) over
+    // every completed stage; snapshots
     // are taken around each timed run with the bus DRAINED first so a
     // late-delivered stage event cannot leak into the next query's
     // window. GC runs in its own threads and is NOT in executorCpuTime,
     // so jvmGCTime is accumulated alongside and reported per query —
     // a CPU ratio read without its gc column could hide a
     // memory-pressure regression. The listener + drain + timed harness
-    // lives in TaskCpuMeter so the dev A/B tools measure with the
-    // identical protocol.
+    // lives in TaskCpuMeter, the one copy of the protocol.
     val meter = new TaskCpuMeter(spark.sparkContext)
     // STREAM TELEMETRY (r13 verdict item 6): per-gate micro-batch count
     // and state-commit ms, snapshotted around each timed run with the

@@ -26,8 +26,8 @@ final class StreamProgressMeter(spark: org.apache.spark.sql.SparkSession) {
       batches.incrementAndGet()
       // the batch's state-maintenance term: per-shard store update +
       // commit time summed over stateful operators — the fixed
-      // machinery cost the r13 DevStreamProf decomposition named as
-      // the gates' dominant wall component
+      // machinery cost the stream-gate decomposition named as the
+      // gates' dominant wall component (OPTIMIZATION_r13.md §5)
       commitMs.addAndGet(e.progress.stateOperators
         .map(so => so.allUpdatesTimeMs + so.commitTimeMs).sum): Unit
     }

@@ -1,16 +1,14 @@
 package graft
 
-/** The task-metric measurement contract, in ONE place (r13 review):
-  * Bench's `queries_cpu`/`queries_gc` columns and the dev A/B tools
-  * (DevKeywordsExp, DevLmExp) archive numbers against each other, so
-  * they must share the same protocol — a listener summing
+/** The task-metric measurement contract, in ONE place: Bench's
+  * `queries_cpu`/`queries_gc` columns and the archived A/B numbers
+  * (BASELINE.md, OPTIMIZATION_r13.md) are read against each other, so
+  * they share one protocol — a listener summing
   * `executorCpuTime` (ns actually ON-CPU per task, ThreadMXBean) and
   * `jvmGCTime` (GC runs in its own threads and is NOT in
   * executorCpuTime) over every completed stage, with the listener bus
   * DRAINED before each snapshot so a late-delivered stage event cannot
-  * leak into the next measurement window. Before this class the
-  * listener + drain + timed harness was copy-pasted three times; a
-  * protocol fix applied to one copy would silently miss the others.
+  * leak into the next measurement window.
   *
   * One meter per SparkContext use-site: registration is cheap and the
   * counters are cumulative — callers read deltas via [[timed]] or

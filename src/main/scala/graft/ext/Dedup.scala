@@ -266,9 +266,9 @@ object Dedup {
   // back to core-count width at the 100× soak, so per-task aggregate
   // state grew linearly with the corpus and the pair hash-aggregate
   // sort-fell-back — 24.4 GB of spill in the join stage, task CPU
-  // 2.9× for 2.0× rows (DevProfile r10; DevShingleCounts proved the
-  // candidate volume itself exactly linear). With AQE off the
-  // exchanges keep GraftSession's data-sized width, per-task state is
+  // 2.9× for 2.0× rows (DevProfile; the candidate volume itself is
+  // exactly linear — BASELINE.md, DevShingleCounts rows). With AQE
+  // off the exchanges keep GraftSession's data-sized width, per-task state is
   // constant in the corpus, and the spill disappears — the identical
   // finding (and fix) as the span family's custom operators.
   //
@@ -1242,8 +1242,8 @@ object Dedup {
     // lives inside the operator's O(cap) group state (a group saturates
     // at cap+1 occurrences and can never emit — no unbounded state can
     // exist at any corpus size), and the a<b cross-doc pairs stream out
-    // directly. Shape history, each step A/B'd on this box (DevSpanExp
-    // / DevProfile, 4 cores, sf0.1, steady): the r7 df-probe +
+    // directly. Shape history, each step A/B'd (4 cores, sf0.1,
+    // steady; BASELINE.md, DevSpanExp rows): the r7 df-probe +
     // two-leg sort-merge self-join paid three corpus-sized exchanges;
     // r8's single udaf(Aggregator) folded them into one exchange
     // (1.9 s pipeline); r9's native TypedImperativeAggregate twin

@@ -145,11 +145,6 @@ object Embeddings {
   // Scale shape: the codebook (labels × dims rows) broadcasts; the
   // vector side streams through one posexplode + one (vec_id, label)
   // aggregate.
-  /** Dev-tool access to the nearest-centroid assignment (DevSoakProd
-    * blocks its production-point pair kernel on it). */
-  private[graft] def clusterAssignments(s: SparkSession, d: String): DataFrame =
-    assignments(s, d)
-
   private def assignments(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val qv = Tables.embeddings(s, d)

@@ -891,8 +891,9 @@ object TextAnalysis {
   // BigramHashPairs kernel, −50% task CPU), no single keywords stage
   // dominates. Pinned accepted-floor with numbers; sub-second
   // absolute, data-proportional (decade α ≤ 0.92). BOTH remaining
-  // plan alternatives were then MEASURED and rejected (DevKeywordsExp,
-  // interleaved same-JVM A/B ×5 reps, identical results asserted):
+  // plan alternatives were then MEASURED and rejected (interleaved
+  // same-JVM A/B ×5 reps, identical results asserted; BASELINE.md and
+  // OPTIMIZATION_r13.md, DevKeywordsExp rows):
   // (B, r12) df as a vocab-sized aggregate + broadcast join back onto
   // un-exchanged tf runs 27% SLOWER at sf0.1 (0.706 vs 0.557 s median)
   // — the broadcast build costs more than the w-keyed exchange it
@@ -912,9 +913,8 @@ object TextAnalysis {
   // 8-byte hash key is NOT lighter — the hash-keying thesis transfers
   // from lm_score only where keys are long (bigram strings ~13 B +
   // struct overhead) or the map-stage kernel itself is the cost.
-  // Per-core floor stands as pinned in r12. Both negatives RE-RUN
-  // after the codegen class-cache fix with the rep-interleaved
-  // DevKeywordsExp (r13 review hardening): committed 0.437 s wall /
+  // The per-core floor stands. Both negatives re-run rep-interleaved
+  // after the codegen class-cache fix: committed 0.437 s wall /
   // 0.584 s CPU vs B 0.656/0.727 vs C 0.643/0.657 — both rejections
   // stand on both axes.
   private val keywords: Q = (s0, d) => {
@@ -1085,12 +1085,11 @@ object TextAnalysis {
     // decomposition caught it: DevProfile showed the occ reduce +
     // localCheckpoint stage was now the LARGEST term (0.68 of 1.29 s
     // runTime at 4-core sf0.1 — the checkpoint serialize/deserialize
-    // cost more than the halved map pass it saved), and the DevLmExp
-    // interleaved A/B (×5 reps, two sessions, identical results)
-    // measured share-less at wall 0.63→0.42/0.62→0.49 s and task CPU
-    // 0.82→0.45/0.80→0.49 s (−40%). Re-measured after the codegen
-    // class-cache fix with the reversed-roles DevLmExp (committed =
-    // share-less, candidate re-adds the share; rep-interleaved):
+    // cost more than the halved map pass it saved), and an
+    // interleaved A/B (×5 reps, two sessions, identical results;
+    // OPTIMIZATION_r13.md, DevLmExp rows) measured share-less at wall
+    // 0.63→0.42/0.62→0.49 s and task CPU 0.82→0.45/0.80→0.49 s (−40%).
+    // Re-measured after the codegen class-cache fix, rep-interleaved:
     // task CPU 0.690 vs 0.887 s at 4-core sf0.1 — the margin narrows
     // to −22% (the cache fix shrank the recompile tax in both arms)
     // but the decision stands. So: NO materialization — each
@@ -1672,7 +1671,7 @@ object TextAnalysis {
     // CacheManager entries for the session; share's blocks are
     // ContextCleaner-reclaimed when the plan is dropped). Unlike
     // lm_score — whose share LOST to recompute once the kernel
-    // cheapened its map pass (r13, DevLmExp) — this one stays: the
+    // cheapened its map pass (OPTIMIZATION_r13.md) — this one stays: the
     // cached projection is 40 B/doc while the avoided pass is a full
     // text decode + tokenize + 4 HOF filters, measured 0.56 → 0.36 s.
     val base = graft.Lineage.share(Tables.spread(Tables.documents(s, d))

@@ -93,9 +93,9 @@ object CappedPairsAgg {
   * every partial buffer through an `ExpressionEncoder`; this
   * `TypedImperativeAggregate` reads the two child expressions straight
   * off the `InternalRow`, appends into a primitive long array, and
-  * serializes buffers as raw little-endian bytes. Measured (DevSpanExp,
-  * 4 cores, sf0.1, steady): 1.73 s → 1.18 s for the full
-  * groupBy(h)+explode pipeline — the residual is the gram exchange
+  * serializes buffers as raw little-endian bytes. Measured (4 cores,
+  * sf0.1, steady; BASELINE.md, DevSpanExp rows): 1.73 s → 1.18 s for
+  * the full groupBy(h)+explode pipeline — the residual is the gram exchange
   * itself (the codegen count-probe floor is 1.18 s too).
   */
 case class CappedPairsAgg(

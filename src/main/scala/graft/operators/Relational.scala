@@ -1468,7 +1468,8 @@ object Relational {
     // is the decimal sum exactly — same value, same HAVING boundary,
     // same emitted double — but the 150k-key hash aggregate runs on
     // primitive longs, measured ~40% faster than Decimal accumulation
-    // (the dominant stage of this query; DevAggExp). Overflow headroom:
+    // (the dominant stage of this query; BASELINE.md, DevAggExp rows).
+    // Overflow headroom:
     // Σ quantity·10⁴ < 2⁶³ until ~9e14 quantity units per order.
     val big = Tables.lineitem(s, d)
       .select($"l_orderkey", $"l_quantity")
@@ -1767,10 +1768,11 @@ object Relational {
     // rounds) would also checkpoint per round like
     // Dedup.connectedComponents.
     //
-    // REJECTED r9 reworks (DevPageRankExp, interleaved same-JVM A/B,
-    // bench hygiene between reps — this shape won every rep, steady
-    // ~2.7 s): (B) repartition(src)+persist to make iteration joins
-    // exchange-free — InMemoryRelation's columnar encode of the edge
+    // REJECTED reworks (interleaved same-JVM A/B, bench hygiene
+    // between reps — this shape won every rep, steady ~2.7 s;
+    // BASELINE.md, DevPageRankExp rows): (B) repartition(src)+persist
+    // to make iteration joins exchange-free — InMemoryRelation's
+    // columnar encode of the edge
     // list costs more than the three exchanges it saves under Bench's
     // per-run hygiene (3.8 s); a localCheckpoint variant LOSES the
     // hash(src) partitioning entirely (its LogicalRDD re-exchanged

@@ -400,8 +400,8 @@ class ExtSpec extends SparkSpec {
   }
 
   test("TaskCpuMeter: a real job reports positive cpu, a no-op window reports zero") {
-    // the contract Bench's queries_cpu column and the Dev A/B tools
-    // archive against: windows are isolated by the bus drain, so an
+    // the contract Bench's queries_cpu column and the archived A/B
+    // numbers are read against: windows are isolated by the bus drain, so an
     // empty window reads 0 even right after a heavy action
     val meter = new TaskCpuMeter(spark.sparkContext)
     val (wall, cpu, gc) = meter.timed(

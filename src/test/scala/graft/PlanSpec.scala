@@ -21,7 +21,7 @@ class PlanSpec extends SparkSpec {
     // Janino and restarts HotSpot tiering from the interpreter —
     // measured 40% of the board's task CPU. Static conf, so it must be
     // set at session build; this pin fails if the builder loses it.
-    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries").toInt >= 4096)
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries").toInt == 4096)
   }
 
   test("incremental filter pushes the checkpoint predicate to parquet") {
@@ -601,6 +601,13 @@ class PlanSpec extends SparkSpec {
     // session included (no SPARK_GRAFT_SF_DIR) — must keep plan
     // identity with the r13 tree by construction
     assert(spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == "10m")
+    // the rest of the AQE coalescing tuning at dataFactor 1: these are
+    // literals in GraftSession.build, and a drift here moves every plan
+    import org.apache.spark.sql.internal.SQLConf
+    val conf = spark.sessionState.conf
+    assert(spark.conf.get("spark.sql.adaptive.coalescePartitions.parallelismFirst") == "true")
+    assert(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) == (64L << 20))
+    assert(conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE) == (1L << 20))
   }
 
   test("noAqe children copy the parent's broadcast threshold: 64 MB past dataFactor 1") {
